@@ -13,21 +13,43 @@ growing directory/Kafka topic: the watermark bounds state (windows older
 than max(event_time) - 1h are finalized and evicted in append mode), and
 the windowed aggregation shuffles once on (window, event_type) with
 partial aggregation map-side — the same plan shape as the batch twin.
+
+Every query in this module starts through `_start_stream`, the one
+place that owns a query's start-time session state. It stops any
+active query of the same name, sets `trigger(availableNow=True)`, and
+for the START only sets two kinds of conf, restoring both in a
+`finally` whether the start succeeds or fails:
+
+* the state partition rule: `spark.sql.shuffle.partitions` is lowered
+  to `min(session value, sparkContext.defaultParallelism)`. A stateful
+  query fixes its state-store partition count from that conf when it
+  first starts, and AQE never coalesces streaming shuffles, so a
+  session tuned for batch (32 partitions, or Spark's default 200) would
+  otherwise run that many near-empty state tasks per micro-batch on a
+  few cores. The count comes from the session itself: `local[32]`
+  keeps 32, a cluster gets its total executor cores;
+* `heavy_state=True` (the stream-stream joins) flips the state store to
+  RocksDB plus its tuning confs (see `_state_provider`).
+
+The query clones the session at start, so the DataFrames returned here
+(the memory-sink tables, the sink read-backs) still run under the
+caller's own shuffle setting.
 """
 
 from __future__ import annotations
 
 import os
 import tempfile
-from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ..datamodel import epoch_micros, epoch_micros_sql, source_fingerprint
 
 # Per-query state-store metrics captured after every completed run:
-# query name -> [{batch_id, operator, n_rows, mem_bytes, custom}, ...].
+# query name -> [{batch_id, operator, n_rows, mem_bytes, shuffle_partitions,
+# custom}, ...].
 # This is the observability the 100-TB design needs — "state is bounded"
 # must be a NUMBER per batch, not an assertion (tools/stream_state_ab.py
 # records it in BASELINE.md).
@@ -89,32 +111,43 @@ def _rocksdb_tuning() -> dict:
     return confs
 
 
-@contextmanager
-def _heavy_state_session(spark: SparkSession):
-    """Scope the state-store provider flip (+ RocksDB tuning confs) to
-    one query START (they are read when the query starts; restoring the
-    confs after .start() keeps the session's other streaming queries
-    untouched)."""
-    prov = _state_provider()
-    if prov is None:
-        yield
-        return
-    flips = {_STATE_PROVIDER_CONF: prov, **_rocksdb_tuning()}
-    prevs = {}
-    for k, v in flips.items():
-        try:
-            prevs[k] = spark.conf.get(k)
-        except Exception:
-            prevs[k] = None
-        spark.conf.set(k, v)
+_SHUFFLE_PARTITIONS_CONF = "spark.sql.shuffle.partitions"
+
+
+def _start_stream(spark: SparkSession, writer, name: str, heavy_state: bool = False):
+    """Start `writer` as the availableNow query `name` (see the module
+    docstring): stop a stale query of that name, size the state
+    partitions to the session's cores, and with `heavy_state` flip the
+    state store to RocksDB. The confs are read when the query starts,
+    so they are restored as soon as `.start()` returns or raises."""
+    for q in spark.streams.active:
+        if q.name == name:
+            q.stop()
+    cores = spark.sparkContext.defaultParallelism
+    confs = {
+        _SHUFFLE_PARTITIONS_CONF:
+            str(min(int(spark.conf.get(_SHUFFLE_PARTITIONS_CONF)), cores)),
+    }
+    prov = _state_provider() if heavy_state else None
+    if prov is not None:
+        confs.update({_STATE_PROVIDER_CONF: prov, **_rocksdb_tuning()})
+    prevs = {k: spark.conf.get(k, None) for k in confs}
     try:
-        yield
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        return writer.queryName(name).trigger(availableNow=True).start()
     finally:
         for k, prev in prevs.items():
             if prev is None:
                 spark.conf.unset(k)
             else:
                 spark.conf.set(k, prev)
+
+
+def _floor_div(expr: str, w: int) -> str:
+    """SQL for floor(expr / w) in exact integer arithmetic (`div` alone
+    truncates toward zero, which differs for negative, pre-1970 epochs)."""
+    return f"(({expr}) - pmod({expr}, {w})) div {w}"
 
 
 def _await_done(q) -> None:
@@ -139,6 +172,7 @@ def _await_done(q) -> None:
                 "operator": op.get("operatorName"),
                 "n_rows": op.get("numRowsTotal"),
                 "mem_bytes": op.get("memoryUsedBytes"),
+                "shuffle_partitions": op.get("numShufflePartitions"),
                 "custom": {
                     k: v for k, v in (op.get("customMetrics") or {}).items()
                     if k in ("rocksdbSstFileSize", "rocksdbTotalMemoryUsage",
@@ -176,11 +210,6 @@ def streaming_event_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = f"{sf_dir}/events.parquet"
     schema = spark.read.parquet(path).schema
 
-    # a previous invocation in the same session may still own the sink name
-    for q in spark.streams.active:
-        if q.name == QUERY_NAME:
-            q.stop()
-
     stream = spark.readStream.schema(schema).parquet(_stage_dir(path))
     ev = stream.withColumn("ts", F.timestamp_micros(epoch_micros(stream)))
     agg = (
@@ -191,14 +220,8 @@ def streaming_event_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias("total_value"),
         )
     )
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(QUERY_NAME)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    _await_done(q)
+    writer = agg.writeStream.format("memory").outputMode("complete")
+    _await_done(_start_stream(spark, writer, QUERY_NAME))
     return spark.table(QUERY_NAME).select(
         F.col("w").getField("start").cast("long").alias("window_start"),
         "event_type",
@@ -274,10 +297,6 @@ def streaming_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = f"{sf_dir}/events.parquet"
     schema = spark.read.parquet(path).schema
 
-    for q in spark.streams.active:
-        if q.name == SESSIONIZE_QUERY_NAME:
-            q.stop()
-
     stream = spark.readStream.schema(schema).parquet(_stage_dir(path))
     # epoch seconds computed Spark-side so the pandas stage sees plain
     # int64 (no timezone semantics anywhere near the state function)
@@ -294,14 +313,8 @@ def streaming_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    q = (
-        sessions.writeStream.format("memory")
-        .queryName(SESSIONIZE_QUERY_NAME)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    _await_done(q)
+    writer = sessions.writeStream.format("memory").outputMode("append")
+    _await_done(_start_stream(spark, writer, SESSIONIZE_QUERY_NAME))
     return spark.table(SESSIONIZE_QUERY_NAME)
 
 
@@ -359,10 +372,6 @@ def streaming_sliding_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = f"{sf_dir}/events.parquet"
     schema = spark.read.parquet(path).schema
 
-    for q in spark.streams.active:
-        if q.name == SLIDING_QUERY_NAME:
-            q.stop()
-
     stream = spark.readStream.schema(schema).parquet(_stage_dir(path))
     ev = stream.withColumn("ts", F.timestamp_micros(epoch_micros(stream)))
     agg = (
@@ -373,14 +382,8 @@ def streaming_sliding_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias("total_value"),
         )
     )
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(SLIDING_QUERY_NAME)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    _await_done(q)
+    writer = agg.writeStream.format("memory").outputMode("complete")
+    _await_done(_start_stream(spark, writer, SLIDING_QUERY_NAME))
     return spark.table(SLIDING_QUERY_NAME).select(
         F.col("w").getField("start").cast("long").alias("window_start"),
         "event_type",
@@ -418,24 +421,14 @@ def streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = f"{sf_dir}/events.parquet"
     schema = spark.read.parquet(path).schema
 
-    for q in spark.streams.active:
-        if q.name == DEDUP_QUERY_NAME:
-            q.stop()
-
     stream = spark.readStream.schema(schema).parquet(_stage_dir(path))
     keys = stream.select(
         "user_id",
         "event_type",
         F.expr(f"({epoch_micros_sql(stream)}) div {86400 * 1_000_000}").cast("bigint").alias("day_bucket"),
     ).dropDuplicates(["user_id", "event_type", "day_bucket"])
-    q = (
-        keys.writeStream.format("memory")
-        .queryName(DEDUP_QUERY_NAME)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    _await_done(q)
+    writer = keys.writeStream.format("memory").outputMode("append")
+    _await_done(_start_stream(spark, writer, DEDUP_QUERY_NAME))
     return spark.table(DEDUP_QUERY_NAME)
 
 
@@ -466,10 +459,6 @@ def streaming_enrich_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = f"{sf_dir}/events.parquet"
     schema = spark.read.parquet(path).schema
 
-    for q in spark.streams.active:
-        if q.name == ENRICH_QUERY_NAME:
-            q.stop()
-
     stream = spark.readStream.schema(schema).parquet(_stage_dir(path))
     cust = (
         spark.read.parquet(f"{sf_dir}/customer.parquet")
@@ -487,14 +476,8 @@ def streaming_enrich_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("value").cast("decimal(18,2)").cast("double").alias("val"),
         )
     )
-    q = (
-        joined.writeStream.format("memory")
-        .queryName(ENRICH_QUERY_NAME)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    _await_done(q)
+    writer = joined.writeStream.format("memory").outputMode("append")
+    _await_done(_start_stream(spark, writer, ENRICH_QUERY_NAME))
     return spark.table(ENRICH_QUERY_NAME)
 
 
@@ -514,6 +497,50 @@ LEFT JOIN customer c ON e.user_id * {ENRICH_KEY_MULT} = c.c_custkey
 
 SSJOIN_QUERY_NAME = "gdalos_stream_ssjoin"
 SSJOIN_RANGE_H = 4  # purchase matches clicks in the preceding 4 hours
+
+
+def _ssjoin_plan(read) -> DataFrame:
+    """streaming_stream_join's bucketed range join over the events frames
+    `read()` returns — streaming in the operator; a batch read runs the
+    same plan (withWatermark is a no-op there)."""
+    w_us = SSJOIN_RANGE_H * 3600 * 1_000_000
+
+    def side(name: str, typ: str) -> DataFrame:
+        s = read()
+        us = F.expr(epoch_micros_sql(s)).cast("bigint")
+        return (
+            s.filter(F.col("event_type") == typ)
+            .select(
+                F.col("user_id").alias(f"{name}_user"),
+                F.col("event_id").alias(f"{name}_id"),
+                F.timestamp_micros(us).alias(f"{name}_ts"),
+            )
+            .withWatermark(f"{name}_ts", "60 days")
+        )
+
+    clicks = side("c", "click").withColumn(
+        "c_bk", F.expr(_floor_div("unix_micros(c_ts)", w_us))
+    )
+    pb = _floor_div("unix_micros(p_ts)", w_us)
+    buys = side("p", "purchase").select(
+        "*", F.explode(F.array(F.expr(pb), F.expr(f"{pb} - 1"))).alias("p_bk"),
+    )
+    return clicks.join(
+        buys,
+        (F.col("c_user") == F.col("p_user"))
+        & (F.col("c_bk") == F.col("p_bk"))
+        & (F.col("c_ts") <= F.col("p_ts"))
+        & (F.col("c_ts") >= F.col("p_ts") - F.expr(f"INTERVAL {SSJOIN_RANGE_H} HOURS")),
+        "inner",
+    ).select(
+        F.col("c_user").alias("user_id"),
+        F.col("c_id").alias("click_id"),
+        F.col("p_id").alias("buy_id"),
+        (
+            (F.expr("unix_micros(p_ts)") - F.expr("unix_micros(c_ts)"))
+            / F.lit(1_000_000)
+        ).cast("bigint").alias("gap_sec"),
+    )
 
 
 def streaming_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -557,63 +584,11 @@ def streaming_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     join."""
     path = f"{sf_dir}/events.parquet"
     schema = spark.read.parquet(path).schema
-
-    for q in spark.streams.active:
-        if q.name == SSJOIN_QUERY_NAME:
-            q.stop()
-
-    w_us = SSJOIN_RANGE_H * 3600 * 1_000_000
-
-    def side(name: str, typ: str) -> DataFrame:
-        s = spark.readStream.schema(schema).parquet(_stage_dir(path))
-        us = F.expr(epoch_micros_sql(s)).cast("bigint")
-        return (
-            s.filter(F.col("event_type") == typ)
-            .select(
-                F.col("user_id").alias(f"{name}_user"),
-                F.col("event_id").alias(f"{name}_id"),
-                F.timestamp_micros(us).alias(f"{name}_ts"),
-            )
-            .withWatermark(f"{name}_ts", "60 days")
-        )
-
-    clicks = side("c", "click").withColumn(
-        "c_bk", F.expr(f"unix_micros(c_ts) div {w_us}")
+    joined = _ssjoin_plan(
+        lambda: spark.readStream.schema(schema).parquet(_stage_dir(path))
     )
-    buys = side("p", "purchase").select(
-        "*",
-        F.explode(
-            F.array(
-                F.expr(f"unix_micros(p_ts) div {w_us}"),
-                F.expr(f"unix_micros(p_ts) div {w_us} - 1"),
-            )
-        ).alias("p_bk"),
-    )
-    joined = clicks.join(
-        buys,
-        (F.col("c_user") == F.col("p_user"))
-        & (F.col("c_bk") == F.col("p_bk"))
-        & (F.col("c_ts") <= F.col("p_ts"))
-        & (F.col("c_ts") >= F.col("p_ts") - F.expr(f"INTERVAL {SSJOIN_RANGE_H} HOURS")),
-        "inner",
-    ).select(
-        F.col("c_user").alias("user_id"),
-        F.col("c_id").alias("click_id"),
-        F.col("p_id").alias("buy_id"),
-        (
-            (F.expr("unix_micros(p_ts)") - F.expr("unix_micros(c_ts)"))
-            / F.lit(1_000_000)
-        ).cast("bigint").alias("gap_sec"),
-    )
-    with _heavy_state_session(spark):
-        q = (
-            joined.writeStream.format("memory")
-            .queryName(SSJOIN_QUERY_NAME)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-    _await_done(q)
+    writer = joined.writeStream.format("memory").outputMode("append")
+    _await_done(_start_stream(spark, writer, SSJOIN_QUERY_NAME, heavy_state=True))
     return spark.table(SSJOIN_QUERY_NAME)
 
 
@@ -682,11 +657,6 @@ def _ssj_outer_run(
     schema = spark.read.parquet(path).schema
 
     arm_l, arm_r = f"{query_name}_l", f"{query_name}_r"
-    names = {query_name, arm_l, arm_r}
-    for q in spark.streams.active:
-        if q.name in names:
-            q.stop()
-
     w_us = SSOJ_RANGE_H * 3600 * 1_000_000
 
     def side(name: str, typ: str) -> DataFrame:
@@ -704,7 +674,7 @@ def _ssj_outer_run(
 
     def single(name: str, typ: str) -> DataFrame:
         return side(name, typ).withColumn(
-            f"{name}_bk", F.expr(f"unix_micros({name}_ts) div {w_us}")
+            f"{name}_bk", F.expr(_floor_div(f"unix_micros({name}_ts)", w_us))
         )
 
     def replicated(name: str, typ: str, ahead: bool) -> DataFrame:
@@ -712,14 +682,10 @@ def _ssj_outer_run(
         # {pb, pb-1}; a click matches purchases in [c_ts, c_ts + W] ->
         # replicas at {cb, cb+1}
         delta = 1 if ahead else -1
+        bk = _floor_div(f"unix_micros({name}_ts)", w_us)
         return side(name, typ).select(
             "*",
-            F.explode(
-                F.array(
-                    F.expr(f"unix_micros({name}_ts) div {w_us}"),
-                    F.expr(f"unix_micros({name}_ts) div {w_us} + {delta}"),
-                )
-            ).alias(f"{name}_bk"),
+            F.explode(F.array(F.expr(bk), F.expr(f"{bk} + {delta}"))).alias(f"{name}_bk"),
         )
 
     cond = (
@@ -746,15 +712,8 @@ def _ssj_outer_run(
         replicated("p", "purchase", ahead=False), cond, "leftOuter"
     ).select(*out_cols)
     if how == "leftOuter":
-        with _heavy_state_session(spark):
-            q = (
-                left_arm.writeStream.format("memory")
-                .queryName(query_name)
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
-            )
-        _await_done(q)
+        writer = left_arm.writeStream.format("memory").outputMode("append")
+        _await_done(_start_stream(spark, writer, query_name, heavy_state=True))
         return spark.table(query_name)
 
     assert how == "fullOuter", how
@@ -764,27 +723,23 @@ def _ssj_outer_run(
         .filter(F.col("c_id").isNull())
         .select(*out_cols)
     )
-    with _heavy_state_session(spark):
-        ql = (
-            left_arm.writeStream.format("memory")
-            .queryName(arm_l)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        qr = (
-            orphan_arm.writeStream.format("memory")
-            .queryName(arm_r)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-    _await_done(ql)
-    _await_done(qr)
+    # both arms run concurrently; if either fails to start or finish,
+    # stop the other too rather than leave it running in the session
+    started = []
+    try:
+        for arm, df in ((arm_l, left_arm), (arm_r, orphan_arm)):
+            writer = df.writeStream.format("memory").outputMode("append")
+            started.append(_start_stream(spark, writer, arm, heavy_state=True))
+        for q in started:
+            _await_done(q)
+    except BaseException:
+        for q in started:
+            q.stop()
+        raise
     LAST_STATE_METRICS[query_name] = [
         {**row, "arm": arm}
         for arm, qn in (("l", arm_l), ("r", arm_r))
-        for row in LAST_STATE_METRICS.get(qn, [])
+        for row in LAST_STATE_METRICS.pop(qn, [])
     ]
     return spark.table(arm_l).unionByName(spark.table(arm_r))
 
@@ -932,10 +887,6 @@ def streaming_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = f"{sf_dir}/events.parquet"
     schema = spark.read.parquet(path).schema
 
-    for q in spark.streams.active:
-        if q.name == SW_QUERY_NAME:
-            q.stop()
-
     stream = spark.readStream.schema(schema).parquet(_stage_dir(path))
     ev = stream.select(
         "user_id",
@@ -954,14 +905,8 @@ def streaming_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_events",
         "session_value",
     )
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(SW_QUERY_NAME)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    _await_done(q)
+    writer = agg.writeStream.format("memory").outputMode("append")
+    _await_done(_start_stream(spark, writer, SW_QUERY_NAME))
     return spark.table(SW_QUERY_NAME)
 
 
@@ -1014,9 +959,6 @@ def streaming_tumbling_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     file set ≡ the batch groupBy, so the oracle gates values fully."""
     path = f"{sf_dir}/events.parquet"
     schema = spark.read.parquet(path).schema
-    for q in spark.streams.active:
-        if q.name == TOPK_QUERY_NAME:
-            q.stop()
     stream = spark.readStream.schema(schema).parquet(_stage_dir(path))
     # tz-free day bucket from epoch micros (calendar day windows shift
     # with the session zone; the leaderboard day must not)
@@ -1025,14 +967,8 @@ def streaming_tumbling_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr(f"(({epoch_micros_sql(stream)}) div 86400000000) * 86400"),
     )
     agg = ev.groupBy("day_start", "event_type").agg(F.count(F.lit(1)).alias("n"))
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(TOPK_QUERY_NAME)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    _await_done(q)
+    writer = agg.writeStream.format("memory").outputMode("complete")
+    _await_done(_start_stream(spark, writer, TOPK_QUERY_NAME))
     from pyspark.sql.window import Window
 
     sink = spark.table(TOPK_QUERY_NAME).select("day_start", "event_type", "n")
@@ -1107,10 +1043,6 @@ def streaming_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = f"{sf_dir}/events.parquet"
     schema = spark.read.parquet(path).schema
 
-    for q in spark.streams.active:
-        if q.name == CUSUM_QUERY_NAME:
-            q.stop()
-
     stream = spark.readStream.schema(schema).parquet(_stage_dir(path))
     ev = stream.select(
         "user_id",
@@ -1125,14 +1057,8 @@ def streaming_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    q = (
-        alarms.writeStream.format("memory")
-        .queryName(CUSUM_QUERY_NAME)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    _await_done(q)
+    writer = alarms.writeStream.format("memory").outputMode("append")
+    _await_done(_start_stream(spark, writer, CUSUM_QUERY_NAME))
     return spark.table(CUSUM_QUERY_NAME)
 
 
@@ -1178,9 +1104,6 @@ def streaming_ohlc_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
     memory sink becomes a Delta/parquet sink the serving layer reads."""
     path = f"{sf_dir}/events.parquet"
     schema = spark.read.parquet(path).schema
-    for q in spark.streams.active:
-        if q.name == OHLC_QUERY_NAME:
-            q.stop()
     stream = spark.readStream.schema(schema).parquet(_stage_dir(path))
     ev = stream.withColumn("ts", F.timestamp_micros(epoch_micros(stream)))
     base = ev.select(
@@ -1202,14 +1125,8 @@ def streaming_ohlc_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).cast("bigint").alias("n_events"),
         )
     )
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(OHLC_QUERY_NAME)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    _await_done(q)
+    writer = agg.writeStream.format("memory").outputMode("complete")
+    _await_done(_start_stream(spark, writer, OHLC_QUERY_NAME))
     return spark.table(OHLC_QUERY_NAME).select(
         "event_type",
         F.col("w").getField("start").cast("long").alias("bar_start_s"),
@@ -1232,7 +1149,7 @@ WM_DELAY_S = 4 * 3600  # watermark delay
 WM_WINDOW_S = 3600     # tumbling window
 
 
-def _stage_three_batches(spark: SparkSession, sf_dir: str) -> str:
+def _stage_three_batches(spark: SparkSession, sf_dir: str) -> tuple[str, StructType]:
     """Stage events as THREE parquet files — event_id mod 3 = 0, 1, 2 —
     with strictly increasing mtimes, so maxFilesPerTrigger=1 processes
     them as three deterministic micro-batches. Three, not two, because
@@ -1241,28 +1158,36 @@ def _stage_three_batches(spark: SparkSession, sf_dir: str) -> str:
     before the eviction that finalized its window has actually run), so
     the first batch whose rows can be dropped as late is the third. In
     production the batches are whatever the source delivers; here
-    determinism is what lets the result be oracle-gated."""
+    determinism is what lets the result be oracle-gated. Returns the
+    staged directory and the source schema."""
     import shutil
 
     from gdalos_spark.datamodel import publish_staged_dir
 
     src = f"{sf_dir}/events.parquet"
+    ev = spark.read.parquet(src)
 
     def build(d: str) -> None:
-        os.makedirs(d, exist_ok=True)
-        ev = spark.read.parquet(src)
+        # one write job: a single task holds every residue class, so the
+        # partitioned write leaves exactly one file per class
+        tmp = os.path.join(d, "_tmp")
+        (
+            ev.withColumn("cls", F.col("event_id") % 3)
+            .coalesce(1)
+            .write.partitionBy("cls")
+            .parquet(tmp)
+        )
         t0 = 1_600_000_000
         for i, tag in enumerate(("batch_a", "batch_b", "batch_c")):
-            tmp = os.path.join(d, f"_tmp_{tag}")
-            ev.filter((F.col("event_id") % 3) == i).coalesce(1).write.mode(
-                "overwrite"
-            ).parquet(tmp)
-            part = [f for f in os.listdir(tmp) if f.endswith(".parquet")][0]
-            os.replace(os.path.join(tmp, part), os.path.join(d, f"{tag}.parquet"))
-            shutil.rmtree(tmp)
+            cls_dir = os.path.join(tmp, f"cls={i}")
+            if not os.path.isdir(cls_dir):  # an empty class still gets its batch
+                ev.limit(0).coalesce(1).write.parquet(cls_dir)
+            part = [f for f in os.listdir(cls_dir) if f.endswith(".parquet")][0]
+            os.replace(os.path.join(cls_dir, part), os.path.join(d, f"{tag}.parquet"))
             os.utime(os.path.join(d, f"{tag}.parquet"), (t0 + 100 * i, t0 + 100 * i))
+        shutil.rmtree(tmp)
 
-    return publish_staged_dir(
+    staged = publish_staged_dir(
         build,
         os.path.join(
             tempfile.gettempdir(), "gdalos_stream_wm",
@@ -1270,6 +1195,7 @@ def _stage_three_batches(spark: SparkSession, sf_dir: str) -> str:
         ),
         source_fingerprint(src),
     )
+    return staged, ev.schema
 
 
 def streaming_watermark_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1292,12 +1218,8 @@ def streaming_watermark_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle reproduces the batch-schedule watermark arithmetic in SQL, so
     this is a hash-gated certification that the engine's late-data
     behavior matches the declared semantics."""
-    staged = _stage_three_batches(spark, sf_dir)
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    staged, schema = _stage_three_batches(spark, sf_dir)
 
-    for q in spark.streams.active:
-        if q.name == WATERMARK_QUERY_NAME:
-            q.stop()
     # fresh in-memory state per invocation: the memory sink accumulates
     # across runs if the checkpoint is reused
     ckpt = tempfile.mkdtemp(prefix="gdalos_wm_ckpt_")
@@ -1313,15 +1235,12 @@ def streaming_watermark_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.window("ts", f"{WM_WINDOW_S} seconds").alias("w"), "event_type")
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    q = (
+    writer = (
         agg.writeStream.format("memory")
-        .queryName(WATERMARK_QUERY_NAME)
         .outputMode("append")
         .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
     )
-    _await_done(q)
+    _await_done(_start_stream(spark, writer, WATERMARK_QUERY_NAME))
     return (
         spark.table(WATERMARK_QUERY_NAME)
         .select(
@@ -1394,7 +1313,7 @@ def streaming_parquet_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     The staged inputs, sink, and checkpoint all re-key on the source
     fingerprint, so regenerated testdata restages instead of appending
     to a stale sink."""
-    staged = _stage_three_batches(spark, sf_dir)
+    staged, schema = _stage_three_batches(spark, sf_dir)
     src = f"{sf_dir}/events.parquet"
     fp = source_fingerprint(src).replace(":", "_")
     base = os.path.join(
@@ -1405,11 +1324,6 @@ def streaming_parquet_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     ckpt = os.path.join(base, "ckpt")
     os.makedirs(base, exist_ok=True)
 
-    for q in spark.streams.active:
-        if q.name == SINK_QUERY_NAME:
-            q.stop()
-
-    schema = spark.read.parquet(src).schema
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1")
@@ -1421,16 +1335,13 @@ def streaming_parquet_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         F.round(F.col("value").cast("decimal(18,2)") * 100).cast("bigint").alias("cents"),
     )
-    q = (
+    writer = (
         rows.writeStream.format("parquet")
-        .queryName(SINK_QUERY_NAME)
         .outputMode("append")
         .option("path", out_dir)
         .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
     )
-    _await_done(q)
+    _await_done(_start_stream(spark, writer, SINK_QUERY_NAME))
     sunk = spark.read.parquet(out_dir)
     return (
         sunk.groupBy("event_type")
@@ -1483,7 +1394,7 @@ def streaming_upsert_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     Last-writer-wins over a total (ts, event_id) order is
     batch-schedule-independent, so the final state equals the batch
     argmax and the entry is fully oracle-gated."""
-    staged = _stage_three_batches(spark, sf_dir)
+    staged, schema = _stage_three_batches(spark, sf_dir)
     src = f"{sf_dir}/events.parquet"
     fp = source_fingerprint(src).replace(":", "_")
     base = os.path.join(
@@ -1493,12 +1404,6 @@ def streaming_upsert_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     ckpt = os.path.join(base, "ckpt")
     cur_ptr = os.path.join(base, "_CURRENT")
     os.makedirs(base, exist_ok=True)
-
-    for q in spark.streams.active:
-        if q.name == UPSERT_QUERY_NAME:
-            q.stop()
-
-    schema = spark.read.parquet(src).schema
 
     def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
         from pyspark.sql.window import Window as W
@@ -1541,14 +1446,8 @@ def streaming_upsert_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         .parquet(staged)
     )
     ev = stream.withColumn("ts", F.timestamp_micros(epoch_micros(stream)))
-    q = (
-        ev.writeStream.foreachBatch(merge_batch)
-        .queryName(UPSERT_QUERY_NAME)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    _await_done(q)
+    writer = ev.writeStream.foreachBatch(merge_batch).option("checkpointLocation", ckpt)
+    _await_done(_start_stream(spark, writer, UPSERT_QUERY_NAME))
     with open(cur_ptr) as f:
         final = spark.read.parquet(f.read().strip())
     return final.select(
@@ -1679,9 +1578,6 @@ def streaming_dedup_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     emitted row."""
     staged = _stage_dedup_wm_batches(spark, sf_dir)
 
-    for q in spark.streams.active:
-        if q.name == DWM_QUERY_NAME:
-            q.stop()
     ckpt = tempfile.mkdtemp(prefix="gdalos_dwm_ckpt_")
 
     stream = (
@@ -1692,15 +1588,12 @@ def streaming_dedup_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = stream.withWatermark(
         "ts", f"{DWM_DELAY_US // 1_000_000} seconds"
     ).dropDuplicatesWithinWatermark(["user_id", "event_type"])
-    q = (
+    writer = (
         out.writeStream.format("memory")
-        .queryName(DWM_QUERY_NAME)
         .outputMode("append")
         .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
     )
-    _await_done(q)
+    _await_done(_start_stream(spark, writer, DWM_QUERY_NAME))
     return (
         spark.table(DWM_QUERY_NAME)
         .select(

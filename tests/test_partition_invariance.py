@@ -92,6 +92,11 @@ INVARIANCE_KEYS = [
     # join must not lose or duplicate rows however the scan is split
     "raster_resample_average",
     "raster_resample_nearest",
+    # stateful streams: their state-partition count follows the
+    # session's cores (min(shuffle partitions, cores)), so the dedup and
+    # the bucketed stream join must emit the same rows at any count
+    "streaming_dedup",
+    "streaming_stream_join",
 ]
 
 

@@ -251,6 +251,35 @@ def test_parquet_sink_oracle_and_exactly_once(spark, ducks):
     assert files_before and files_before == files_after
 
 
+def test_three_batch_staging_one_file_per_class(spark, tmp_path, monkeypatch):
+    """The one-job staging leaves exactly one file per event_id % 3
+    class, in class order by mtime, and an empty class still gets its
+    (empty) batch file so the batch schedule does not shift."""
+    import os as _os
+    import tempfile as _tempfile
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from gdalos_spark.streaming.events import _stage_three_batches
+
+    monkeypatch.setattr(_tempfile, "tempdir", str(tmp_path / "tmp"))
+    ids = [0, 1, 3, 4, 6]  # no id in class 2
+    pq.write_table(pa.table({
+        "event_id": pa.array(ids, pa.int64()),
+        "user_id": pa.array([7] * len(ids), pa.int64()),
+    }), str(tmp_path / "events.parquet"))
+    staged, schema = _stage_three_batches(spark, str(tmp_path))
+    assert schema.fieldNames() == ["event_id", "user_id"]
+    files = [_os.path.join(staged, f"{t}.parquet") for t in ("batch_a", "batch_b", "batch_c")]
+    got = [sorted(pq.read_table(f).column("event_id").to_pylist()) for f in files]
+    assert got == [[0, 3, 6], [1, 4], []]
+    assert pq.read_schema(files[2]).names == ["event_id", "user_id"]
+    mtimes = [_os.stat(f).st_mtime for f in files]
+    assert mtimes == sorted(set(mtimes))
+    assert sorted(_os.listdir(staged)) == ["_STAGED", *(_os.path.basename(f) for f in files)]
+
+
 def test_upsert_sink_oracle_and_idempotent_rerun(spark, ducks):
     """foreachBatch merge must equal the batch argmax, and a re-run on
     the committed checkpoint must leave the _CURRENT pointer unchanged
